@@ -29,20 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _pin(df: DataFrame, *keys: str) -> DataFrame:
-    """Explicit REPARTITION_BY_NUM on ``keys`` at cluster parallelism.
-
-    The iterative operators below checkpoint their edge/state tables and
-    then join them once per round; the checkpoint stores whatever
-    partitioning its input ENDS with, and for a few-MB edge list AQE's
-    byte-based coalescing leaves 1-3 partitions — capping every
-    subsequent round's join/aggregate compute at 1-3 tasks regardless of
-    cluster size (the work here is CPU-dense per byte, so bytes are the
-    wrong proxy). A user-numbered repartition is never coalesced by AQE
-    and scales with the session (defaultParallelism), not a constant."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, *keys)
+from .partitioning import fan_out
 
 
 def bellman_ford(
@@ -65,18 +52,13 @@ def bellman_ford(
     # materialize the edge list once — every round joins it, and without
     # the checkpoint round k would recompute the (possibly expensive) edge
     # derivation k times (measured 16 s -> ~8 s on the sf0.1 co-purchase
-    # graph, whose edges come from a lineitem self-join). The checkpoint
-    # stores whatever partitioning its input ends with — after AQE's
-    # byte-based coalescing that is 1-3 partitions for a few-MB edge list,
-    # which then caps EVERY relaxation round's broadcast-join compute at
-    # 1-3 tasks; the explicit REPARTITION_BY_NUM pins the stored layout
-    # (and so every round) at cluster parallelism.
+    # graph, whose edges come from a lineitem self-join).
     e, _ = tracked_local_checkpoint(
         edges.select(
             F.col(src).alias("e_src"),
             F.col(dst).alias("e_dst"),
             F.col(weight).alias("e_w"),
-        ).transform(lambda d: _pin(d, "e_src")),
+        ).transform(fan_out, "e_src"),
         register=True,
     )
     dist, dist_ids = tracked_local_checkpoint(
@@ -133,7 +115,7 @@ def label_propagation(
 
     spark = edges.sparkSession
     e, _ = tracked_local_checkpoint(
-        _pin(
+        fan_out(
             edges.select(
                 F.col(src).alias("e_src"),
                 F.col(dst).alias("e_dst"),
@@ -244,7 +226,7 @@ def pagerank_integer(
             )
     deg = e0.groupBy("e_src").agg(F.sum("e_w").alias("e_sw"))
     e, _ = tracked_local_checkpoint(
-        _pin(e0.join(deg, "e_src"), "e_src"), register=True
+        fan_out(e0.join(deg, "e_src"), "e_src"), register=True
     )
     nodes = e.select(F.col("e_src").alias("node")).distinct()
     n_frame = nodes.groupBy().agg(F.count(F.lit(1)).alias("n"))
@@ -348,7 +330,7 @@ def bellman_ford_snapshots(
         raise ValueError("snapshot_rounds must name at least one round")
     spark = edges.sparkSession
     e, _ = tracked_local_checkpoint(
-        _pin(
+        fan_out(
             edges.select(
                 F.col(src).alias("e_src"),
                 F.col(dst).alias("e_dst"),
@@ -430,7 +412,7 @@ def k_core_survivors(
         # once, cheap relative to the peel rounds, and makes the public
         # operator safe on raw (non-distinct) pair feeds.
         e, _ = tracked_local_checkpoint(
-            _pin(e.distinct(), "e_src"), register=True
+            fan_out(e.distinct(), "e_src"), register=True
         )
     surv, surv_ids = tracked_local_checkpoint(
         e.select(F.col("e_src").alias("node")).distinct(), register=True
@@ -505,7 +487,7 @@ def core_numbers(
         # same simple-graph discipline as k_core_survivors: degree is
         # count(*) per src, so dedup before counting
         e, _ = tracked_local_checkpoint(
-            _pin(e.distinct(), "e_src"), register=True
+            fan_out(e.distinct(), "e_src"), register=True
         )
     nodes, _ = tracked_local_checkpoint(
         e.select(F.col("e_src").alias("node")).distinct(), register=True
@@ -551,7 +533,7 @@ def min_label_rounds(
 
     spark = edges.sparkSession
     e, _ = tracked_local_checkpoint(
-        _pin(
+        fan_out(
             edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")),
             "e_src",
         ),

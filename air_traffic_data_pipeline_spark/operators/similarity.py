@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from ..functions.vectors import cosine, dot, norm, to_double
+from .partitioning import fan_out
 
 # 8 deterministic integer hyperplanes for d-dim vectors:
 # plane[j][d] = ((j*37 + d*17) % 19) - 9  (range -9..9, mean ~0)
@@ -425,20 +426,14 @@ def nsw_finish(fwd: DataFrame, v: DataFrame) -> DataFrame:
         # list once per round so the upstream build (the banded multi-probe
         # join, the heavy subplan) never re-executes
         edges, _ = tracked_local_checkpoint(edges, register=True)
-        # the two-hop rescore is compute-dense over TINY shuffle bytes
-        # (N*M_DEG^2 exact 64-dim cosines behind a few-MB shuffle), so
-        # AQE's byte-based coalescing squeezes it onto 2-3 tasks; explicit
-        # REPARTITION_BY_NUM exchanges on the join keys pin the dense
-        # stages at cluster parallelism (scale-adaptive: defaultParallelism,
-        # not a constant; AQE never coalesces user-numbered repartitions)
-        par = edges.sparkSession.sparkContext.defaultParallelism
+        # N*M_DEG^2 exact cosines behind a few-MB shuffle: pin both joins
         two_hop = (
             edges.alias("a")
             .join(edges.alias("b"), F.col("a.dst") == F.col("b.src"))
             .filter(F.col("a.src") != F.col("b.dst"))
             .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
             .distinct()
-            .repartition(par, "src")
+            .transform(fan_out, "src")
         )
         rescored = (
             two_hop.join(
@@ -449,7 +444,7 @@ def nsw_finish(fwd: DataFrame, v: DataFrame) -> DataFrame:
                 ),
                 "src",
             )
-            .repartition(par, "dst")
+            .transform(fan_out, "dst")
             .join(
                 vv.select(
                     F.col("vec_id").alias("dst"),

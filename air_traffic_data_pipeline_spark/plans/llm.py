@@ -34,6 +34,7 @@ from ..functions.text import (
     word_count,
 )
 from ..functions.vectors import cosine, cosine_sql, dot, dot_sql, norm, norm_sql, to_double
+from ..operators.partitioning import fan_out
 from ..operators.similarity import (
     HNSW_L0_ROUNDS,
     HNSW_L1_ROUNDS,
@@ -54,7 +55,7 @@ from ..operators.similarity import (
     nsw_beam_topk,
 )
 from .sqlutil import dlit
-from .tables import fan_out, load
+from .tables import load
 
 EMB_DIM = 64
 
@@ -791,16 +792,9 @@ def srp_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ssq = stats.select("doc_id", "ssq")
     pa = per.select(F.col("doc_id").alias("doc_a"), "b", F.col("c").alias("ca"))
     pb = per.select(F.col("doc_id").alias("doc_b"), "b", F.col("c").alias("cb"))
-    # the exact-dot verify is compute-dense behind ~2 MB shuffles (each
-    # candidate pair expands to its shared-bucket rows), so AQE's
-    # byte-based coalescing ran it on ONE task (measured 2.3 s + 2.0 s
-    # single-task stages at sf0.1); REPARTITION_BY_NUM pins the two join
-    # stages at cluster parallelism — scale-adaptive, never coalesced
-    par = spark.sparkContext.defaultParallelism
+    # the exact-dot verify is compute-dense behind ~2 MB shuffles
     dots = (
-        cand.repartition(par, "doc_a")
-        .join(pa, "doc_a")
-        .repartition(par, "doc_b", "b")
+        fan_out(fan_out(cand, "doc_a").join(pa, "doc_a"), "doc_b", "b")
         .join(pb, ["doc_b", "b"])
         .groupBy("doc_a", "doc_b")
         .agg(F.sum(F.col("ca") * F.col("cb")).cast("bigint").alias("dot"))
@@ -10345,13 +10339,9 @@ def winnow_fp_from(
         .orderBy("pos")
         .rowsBetween(W.currentRow, w_win - 1)
     )
-    # pin the window's doc_id exchange at cluster parallelism: the min-key
-    # scan over every gram window is compute-dense behind a ~16 MB shuffle,
-    # so AQE's byte-based coalescing ran it on ~12 tasks (measured 11.2 s
-    # of runtime there at sf0.1); the explicit REPARTITION_BY_NUM satisfies
-    # the window's clustering requirement, so no exchange is added
-    par = d.sparkSession.sparkContext.defaultParallelism
-    grams = grams.repartition(par, "doc_id")
+    # the pin satisfies the window's clustering requirement, so the
+    # compute-dense min-key scan adds no exchange of its own
+    grams = fan_out(grams, "doc_id")
     sel = grams.select(
         "pos",
         "doc_id",

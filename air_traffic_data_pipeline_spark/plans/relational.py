@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from ..operators.partitioning import fan_out
 from .sqlutil import dlit
 from .tables import load
 
@@ -5238,13 +5239,9 @@ def copurchase_pairs(li: DataFrame) -> DataFrame:
     the lineitem stream yields partials that merge by integer SUM (the
     streaming mirror's state).
 
-    The self-join is pinned at cluster parallelism with one explicit
-    REPARTITION_BY_NUM exchange (shared by both sides via exchange
-    reuse): the pair expansion + count is compute-dense behind a ~10 MB
-    shuffle, so AQE's byte-based coalescing was running it on 3 tasks
-    (measured: a 5.4 s single-digit-task stage at sf0.1)."""
-    par = li.sparkSession.sparkContext.defaultParallelism
-    li = li.repartition(par, "l_orderkey")
+    One pin serves both sides of the compute-dense self-join (exchange
+    reuse); a frame bucketed on l_orderkey keeps its zero-shuffle join."""
+    li = fan_out(li, "l_orderkey")
     return (
         li.alias("a")
         .join(

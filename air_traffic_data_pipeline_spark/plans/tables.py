@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from ..operators.partitioning import fan_out  # noqa: F401  (query bodies import it from here)
 from ..session import tune_session
 
 TABLES = (
@@ -46,79 +47,6 @@ def _canonical_event_time(df: DataFrame) -> DataFrame:
             "ts", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)
         )
     return df
-
-
-def _conf_bytes(val: str) -> int:
-    """Parse a Spark byte conf ("134217728", "128m", "1g") to bytes."""
-    val = val.strip().lower().rstrip("b")
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if val and val[-1] in units:
-        return int(float(val[:-1]) * units[val[-1]])
-    return int(val)
-
-
-def fan_out(df: DataFrame) -> DataFrame:
-    """Small-input guard for CPU-heavy per-row pipelines (explode, k x md5).
-
-    A tiny parquet file scans as a single partition (one row group), which
-    serializes everything downstream onto one core. When the scan can't
-    split into >= cluster-parallelism partitions, round-robin repartition
-    first — the shuffle moves only the small input. At 100 TB the scan
-    already yields >= cores partitions and this is a no-op (no shuffle
-    added).
-
-    The estimate uses the scan's file list + sizes (driver-side metadata
-    only) instead of ``df.rdd.getNumPartitions()``, which would force a
-    physical-plan materialization on every query build.
-    """
-    import os
-    from urllib.parse import unquote, urlparse
-
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if not files or len(files) >= target:
-        return df  # non-file source, or already enough splits
-    max_part = _conf_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    open_cost = _conf_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-    )
-    sizes = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("file", ""):
-            # remote store: stat through the Hadoop FS (one RPC per file,
-            # bounded by target-1 files) — file count alone cannot
-            # distinguish "few small files" (needs the repartition) from
-            # "few big files" (the scan splits them itself)
-            try:
-                jvm = spark._jvm
-                jpath = jvm.org.apache.hadoop.fs.Path(f)
-                fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-                sizes.append(int(fs.getFileStatus(jpath).getLen()))
-            except Exception:
-                # unreachable store mid-build: trust the scan rather than
-                # risk shuffling a large input for nothing
-                return df
-            continue
-        try:
-            sizes.append(os.path.getsize(unquote(u.path)))
-        except OSError:
-            # file vanished between listing and stat (compaction race):
-            # count it as one split and keep going — never fail the build
-            sizes.append(0)
-    # Mirror Spark's FilePartition sizing: maxSplitBytes =
-    # min(maxPartitionBytes, max(openCostInBytes, totalBytes/parallelism))
-    # — using maxPartitionBytes alone undercounts splits and would add a
-    # full-scan shuffle for inputs the scan already parallelizes.
-    total = sum(sizes) + open_cost * len(sizes)
-    max_split = min(max_part, max(open_cost, total // max(1, target)))
-    est_splits = sum(max(1, -(-s // max_split)) for s in sizes)
-    if est_splits >= target:
-        return df
-    return df.repartition(target)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -10,6 +10,7 @@ coalescing, which is enabled here.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -26,9 +27,34 @@ def _shuffle_partitions() -> str:
     )
 
 
+def _driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set (deployment override),
+    else 60% of the smaller of MemAvailable and the cgroup limit, within
+    [1g, 64g] — a fixed heap larger than the machine grows until the
+    kernel OOM-kills the JVM; the other 40% covers off-heap and Python."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in (
+        "/proc/meminfo",
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as fh:
+                text = fh.read()
+        except OSError:
+            continue
+        avail = re.search(r"^MemAvailable:\s+(\d+) kB", text, re.M)
+        if avail:
+            limits.append(int(avail.group(1)) << 10)
+        elif text.strip().isdigit():  # a cgroup limit; v2 writes "max" for none
+            limits.append(int(text))
+    return f"{min(64 << 10, max(1 << 10, int(min(limits) * 0.6) >> 20))}m"
+
+
 def get_spark(app_name: str = "air-traffic-engine") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -36,7 +62,7 @@ def get_spark(app_name: str = "air-traffic-engine") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # test lake writes nanosecond parquet timestamps; read them as long

@@ -1,12 +1,17 @@
-"""Driver-contract hygiene: entry() teardown and the fan_out scan heuristic."""
+"""Driver-contract hygiene: entry() teardown, the fan_out partitioning
+policy and the machine-sized driver heap."""
 
 from __future__ import annotations
+
+import os
+import re
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as ent
 from air_traffic_data_pipeline_spark.plans import llm
-from air_traffic_data_pipeline_spark.plans.tables import _conf_bytes, fan_out, load
+from air_traffic_data_pipeline_spark.operators.partitioning import _conf_bytes, fan_out
+from air_traffic_data_pipeline_spark.plans.tables import load
 
 SF = "/root/testdata/sf0.001"
 
@@ -103,17 +108,61 @@ def test_conf_bytes_parses_spark_units():
 
 def test_fan_out_spreads_small_scan(spark):
     """A one-file scan must fan out to cluster parallelism without
-    materializing the physical plan via df.rdd."""
+    materializing the physical plan via df.rdd. Keyed, a plain scan and a
+    join output (whose exchange AQE would coalesce; here its sides are
+    hash-partitioned at different widths) both get a REPARTITION_BY_NUM
+    exchange at that width. Building the frames starts no Spark job."""
     d = load(spark, SF, "documents")
     target = spark.sparkContext.defaultParallelism
+    tracker = spark.sparkContext.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup())
     out = fan_out(d)
+    other = d.select("doc_id").repartition(target + 1, "doc_id").hint("merge")
+    keyed = [
+        fan_out(d, "doc_id"),
+        fan_out(fan_out(d, "doc_id").join(other, "doc_id"), "doc_id"),
+    ]
+    assert set(tracker.getJobIdsForGroup()) == jobs
+    pin = re.compile(rf"hashpartitioning\(doc_id#\d+L?, {target}\), REPARTITION_BY_NUM")
+    for k in keyed:
+        plan = k._jdf.queryExecution().executedPlan().toString()
+        assert pin.search(plan.splitlines()[1]), plan  # the outermost exchange
     assert out.rdd.getNumPartitions() == target
 
 
 def test_fan_out_noop_on_non_file_source(spark):
-    """Derived in-memory frames (no input files) pass through untouched."""
+    """Inputs that are already spread pass through untouched: derived
+    in-memory frames (no input files), and, keyed, a table bucketed on the
+    key — without starting a Spark job."""
+    import uuid
+
+    from air_traffic_data_pipeline_spark.sinks.lake import read_table, write_bucketed
+
     d = spark.range(10).select(F.col("id"))
     assert fan_out(d) is d
+    tname = f"bkt_docs_{uuid.uuid4().hex[:8]}"
+    write_bucketed(load(spark, SF, "documents"), tname, "doc_id", n_buckets=2)
+    try:
+        bkt = read_table(spark, tname)
+        tracker = spark.sparkContext.statusTracker()
+        jobs = set(tracker.getJobIdsForGroup())
+        assert fan_out(bkt, "doc_id") is bkt
+        assert set(tracker.getJobIdsForGroup()) == jobs
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+
+
+def test_driver_heap_fits_the_machine(monkeypatch):
+    """The default driver heap is derived from the machine (never more
+    than its physical RAM); SPARK_GRAFT_DRIVER_MEM still overrides it."""
+    from air_traffic_data_pipeline_spark.session import _driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    heap = _driver_memory()
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert heap.endswith("m") and 1 << 10 <= int(heap[:-1]) <= phys >> 20
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_memory() == "3g"
 
 
 def test_reliable_checkpoint_switch(spark, monkeypatch, tmp_path):

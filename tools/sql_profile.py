@@ -2,45 +2,36 @@
 
 Usage: python tools/sql_profile.py <sf_dir> <name>
 
-Runs the named query once (noop sink) in a UI-enabled session and prints
-the SQL tab's executed-plan node metrics — operator name plus its reported
-timing/row metrics — so stage-level ambiguity (AQE re-use, fused stages)
-can be resolved to actual operators.
+Runs the named query once (noop sink) in the engine session
+(``get_spark``) and prints the executed-plan node metrics of that run —
+operator name plus its reported timing/row metrics — read from the
+in-process SQL status store (no UI needed), so stage-level ambiguity
+(AQE re-use, fused stages) can be resolved to actual operators.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import urllib.request
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
 
 
 def main() -> None:
     sf_dir = sys.argv[1]
     name = sys.argv[2]
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("sql-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "64g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     import __spark_entry__ as ent
+    from air_traffic_data_pipeline_spark.session import get_spark
     from bench import _clear_engine_caches
 
+    spark = get_spark("sql-profile")
+    spark.sparkContext.setLogLevel("ERROR")
     qs = ent.queries()
     _clear_engine_caches(spark)
     qs[name](spark, os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")).write.format("noop").mode(
@@ -49,39 +40,53 @@ def main() -> None:
     _clear_engine_caches(spark)
     qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    base = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[1]}"
-    app = json.load(urllib.request.urlopen(f"{base}/api/v1/applications"))[0]["id"]
-    sqls = json.load(
-        urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/sql?details=true&planDescription=false&length=200"
-        )
-    )
-    # the last completed execution is the timed run; the list can be empty
-    # if the timed run failed or is still marked RUNNING when scraped
-    done = [s for s in sqls if s.get("status") == "COMPLETED"]
+    store = spark._jsparkSession.sharedState().statusStore()
+    # the status listener records an execution's end asynchronously: give
+    # the timed run (the last execution) a few seconds to be marked done
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline and not _seq(store.executionsList())[-1].completionTime().isDefined():
+        time.sleep(0.1)
+    done = [
+        e
+        for e in _seq(store.executionsList())
+        if e.completionTime().isDefined()
+        and not (e.errorMessage().isDefined() and e.errorMessage().get())
+    ]
     if not done:
-        statuses = sorted({s.get("status", "?") for s in sqls})
-        print(f"no COMPLETED SQL execution found (statuses seen: {statuses})")
+        print("no COMPLETED SQL execution found")
         return
     ex = done[-1]
-    print(f"duration={ex['duration']}ms nodes={len(ex.get('nodes', []))}")
+    eid = ex.executionId()
+    nodes = _seq(store.planGraph(eid).allNodes())
+    duration = ex.completionTime().get().getTime() - ex.submissionTime()
+    print(f"duration={duration}ms nodes={len(nodes)}")
+    values = {}
+    it = store.executionMetrics(eid).iterator()
+    while it.hasNext():
+        kv = it.next()
+        values[kv._1()] = kv._2().removeprefix("\n")
     rows = []
-    for node in ex.get("nodes", []):
-        mets = {m["name"]: m["value"] for m in node.get("metrics", [])}
+    for node in nodes:
+        mets = {
+            m.name().strip(): values[m.accumulatorId()]
+            for m in _seq(node.metrics())
+            if m.accumulatorId() in values
+        }
         t = 0.0
         for k, v in mets.items():
             if "total time" in k or "time in" in k or k == "time to build hash map":
-                # values like "2.1 s", "341 ms", or "total (min, med, max)..."
-                first = v.split("(")[0].strip().split("\n")[0]
+                # values like "341 ms", or "total (min, med, max ...)" with
+                # the total leading the next line: "2.1 s (0.1 s, ...)"
+                first = v.splitlines()[-1].split("(")[0].strip()
                 try:
                     num, unit = first.split()[:2]
                     mult = {"ms": 1, "s": 1000, "m": 60000, "us": 0.001}.get(
                         unit.rstrip(","), 0
                     )
                     t += float(num.replace(",", "")) * mult
-                except Exception:
+                except ValueError:
                     pass
-        rows.append((t, node["nodeId"], node["nodeName"], mets))
+        rows.append((t, node.id(), node.name().strip(), mets))
     rows.sort(reverse=True)
     for t, nid, nname, mets in rows[:25]:
         out = {k: v.split("\n")[0] for k, v in mets.items() if "rows" in k or "time" in k}

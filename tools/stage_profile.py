@@ -2,20 +2,18 @@
 
 Usage: python tools/stage_profile.py <sf_dir> <name> [reps]
 
-Runs the named query with a UI-enabled local session (the repo session
-disables the UI; the driver never runs this tool), executes it once warm +
-once timed with the noop sink, then prints every completed stage of the
-timed run sorted by executor run time, with shuffle read/write bytes and
-task counts — the poor man's Stages tab on a box with no browser.
+Runs the named query in the engine session (``get_spark``), executes it
+once warm + ``reps`` times timed with the noop sink, then prints every
+completed stage of the timed runs sorted by executor run time, with
+shuffle read/write bytes and task counts — the poor man's Stages tab,
+read from the in-process status store (no UI needed).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,27 +23,11 @@ def main() -> None:
     name = sys.argv[2]
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 1
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stage-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "64g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "5000")
-        .config("spark.ui.retainedJobs", "5000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-
     import __spark_entry__ as ent
+    from air_traffic_data_pipeline_spark.session import get_spark
     from bench import _clear_engine_caches
 
+    spark = get_spark("stage-profile")
     qs = ent.queries()
     # warm codegen on the small lake
     _clear_engine_caches(spark)
@@ -53,19 +35,19 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    base = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[1]}"
+    store = spark.sparkContext._jsc.sc().statusStore()
+    no_quantiles = spark.sparkContext._gateway.new_array(spark._jvm.double, 0)
 
-    def stages() -> list[dict]:
-        app = json.load(
-            urllib.request.urlopen(f"{base}/api/v1/applications")
-        )[0]["id"]
-        return json.load(
-            urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}/stages?status=complete"
-            )
-        )
+    def stages() -> list:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        seq = store.stageList(None, False, False, no_quantiles, None)
+        return [
+            s
+            for s in (seq.apply(i) for i in range(seq.size()))
+            if s.status().toString() == "COMPLETE"
+        ]
 
-    n0 = {s["stageId"] for s in stages()}
+    n0 = {s.stageId() for s in stages()}
     best = None
     for _ in range(reps):
         _clear_engine_caches(spark)
@@ -75,9 +57,9 @@ def main() -> None:
         best = dt if best is None or dt < best else best
     print(f"{name}: wall min={best:.3f}s over {reps} rep(s)")
 
-    rows = [s for s in stages() if s["stageId"] not in n0]
-    rows.sort(key=lambda s: -s["executorRunTime"])
-    tot_run = sum(s["executorRunTime"] for s in rows)
+    rows = [s for s in stages() if s.stageId() not in n0]
+    rows.sort(key=lambda s: -s.executorRunTime())
+    tot_run = sum(s.executorRunTime() for s in rows)
     print(
         f"{len(rows)} stages, executorRunTime total {tot_run/1000:.2f}s"
         f" (all reps)\n"
@@ -86,12 +68,12 @@ def main() -> None:
     )
     for s in rows[:40]:
         print(
-            f"{s['stageId']:>6} {s['executorRunTime']/1000:>7.2f}s"
-            f" {s.get('executorCpuTime', 0)/1e9:>7.2f}s"
-            f" {s.get('jvmGcTime', 0)/1000:>7.2f}s"
-            f" {s['numCompleteTasks']:>5}"
-            f" {s['inputBytes']:>9} {s['shuffleReadBytes']:>9}"
-            f" {s['shuffleWriteBytes']:>9}  {s['name'][:60]}"
+            f"{s.stageId():>6} {s.executorRunTime()/1000:>7.2f}s"
+            f" {s.executorCpuTime()/1e9:>7.2f}s"
+            f" {s.jvmGcTime()/1000:>7.2f}s"
+            f" {s.numCompleteTasks():>5}"
+            f" {s.inputBytes():>9} {s.shuffleReadBytes():>9}"
+            f" {s.shuffleWriteBytes():>9}  {s.name()[:60]}"
         )
 
 
